@@ -173,9 +173,10 @@ class TableMeta:
     retired_regions: list[RegionFile] = field(default_factory=list)
     # operation name per generation (r11 — DESCRIBE HISTORY): keys are
     # str(seq) like generation_times; maintained with the SAME pruning
-    # rules (a generation whose stamp drops loses its op too).  Writers
-    # record the mechanism; the SQL session overrides with the statement
-    # name.  Generations committed before this field existed show as
+    # rules (a generation whose stamp drops loses its op too).  Written
+    # by the commit that creates or folds the generation: the statement
+    # name for session writes, else the mechanism (AstroRelation.op).
+    # Generations committed before this field existed show as
     # 'unknown'.
     generation_ops: dict = field(default_factory=dict)
     # optimistic-concurrency version (r12, VERDICT r11 #1): the version

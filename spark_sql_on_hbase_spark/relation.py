@@ -254,10 +254,21 @@ class AstroRelation:
     # cannot wedge a reclaim indefinitely
     LEASE_REFRESH_HORIZON_SEC = 6 * 3600.0
 
-    def __init__(self, catalog: AstroCatalog, meta: TableMeta, spark: SparkSession):
+    def __init__(
+        self,
+        catalog: AstroCatalog,
+        meta: TableMeta,
+        spark: SparkSession,
+        op: str | None = None,
+    ):
         self.catalog = catalog
         self.meta = meta
         self.spark = spark
+        # DESCRIBE HISTORY label: the SQL statement this relation writes
+        # for (INSERT, DELETE, …).  Every commit that creates or folds a
+        # generation records it in that same commit; None (direct API
+        # callers) records the mechanism (APPEND, WRITE, COMPACT, …).
+        self.op = op
         import uuid as _uuid
 
         self._lease_id = _uuid.uuid4().hex[:16]
@@ -333,22 +344,10 @@ class AstroRelation:
             )
             meta.layout = "zorder"
             meta.align_prefix = 0
-            if mode == "overwrite" and refresh:
-                # dir clobbered — reclaim (r10).  refresh=False targets a
-                # TEMP dir (_rewrite_with): the real dir's retired
-                # fragments are untouched there
-                meta.retired_regions = []
-                meta.gc_pending = []
-            if refresh:
-                self._refresh_region_bounds(restamp=restamp)
-                self._record_gen_op(0, "WRITE")
-            return
-        if align_prefix:
-            part_cols = [F.col(c) for c in meta.key_names[:align_prefix]]
-        else:
-            part_cols = [F.col(ROWKEY_COL)]
-        ranged = keyed.repartitionByRange(n, *part_cols)
-        if align_prefix:
+        elif align_prefix:
+            ranged = keyed.repartitionByRange(
+                n, *[F.col(c) for c in meta.key_names[:align_prefix]]
+            )
             ids = mine_region_ids(n)
             # partition index → mined bucket id, map-local (no extra shuffle:
             # each range-partition task holds exactly one _region value and
@@ -370,7 +369,9 @@ class AstroRelation:
             meta.align_prefix = int(align_prefix)
         else:
             _layout_options(
-                ranged.sortWithinPartitions(ROWKEY_COL).write.mode(mode)
+                keyed.repartitionByRange(n, F.col(ROWKEY_COL))
+                .sortWithinPartitions(ROWKEY_COL)
+                .write.mode(mode)
             ).parquet(out_dir)
             meta.layout = "range"
         if mode == "overwrite" and refresh:
@@ -379,8 +380,9 @@ class AstroRelation:
             meta.retired_regions = []
             meta.gc_pending = []
         if refresh:
+            # the label rides the refresh commit (generation 0)
+            meta.generation_ops["0"] = self.op or "WRITE"
             self._refresh_region_bounds(restamp=restamp)
-            self._record_gen_op(0, "WRITE")
 
     def ensure_spark_table(self) -> str:
         """Re-register the bucketed table in a fresh session from catalog
@@ -543,14 +545,19 @@ class AstroRelation:
         Files bake their generation into the ``_seq`` column, so a
         post-hoc renumber would mean rewriting them; reserving first
         makes the later finalize commit purely additive.  The finalize
-        (or the empty-batch rollback) unpins."""
+        (or the empty-batch rollback) unpins.
+
+        The same commit records the generation's DESCRIBE HISTORY label:
+        the relation's statement name when it has one, else ``op`` (the
+        mechanism — APPEND, REWRITE, INDEX).  Nothing relabels it later,
+        so a sibling's commit landing mid-statement cannot swap labels."""
         import time as _time
 
         def reserve():
             meta = self.meta
             seq = self._next_seq()
             meta.generation_times[str(seq)] = _time.time()
-            meta.generation_ops[str(seq)] = op
+            meta.generation_ops[str(seq)] = self.op or op
             if seq not in meta.pinned_gens:
                 meta.pinned_gens.append(seq)
             self.catalog.persist(meta)
@@ -806,6 +813,7 @@ class AstroRelation:
         m.history_floor = 0  # everything rebuilt at generation 0
         m.regions = []
         m.layout, m.align_prefix = new_layout, new_align
+        m.generation_ops["0"] = self.op or op  # committed by the refresh
         try:
             # folded history: gen 0 re-stamps at rewrite time
             # (restamp="now", applied only HERE — after the files are in
@@ -842,7 +850,6 @@ class AstroRelation:
                 ),
             ) from e
         self._run_gc(release_own_lease=True)
-        self._record_gen_op(0, op)
 
     def _clear_orphan_rw(self, out_dir: str) -> None:
         """Reclaim ``rw-<this-table>-…`` files a CRASHED rewrite left
@@ -1087,17 +1094,20 @@ class AstroRelation:
         survivor files, keep every stamp, leave the floor untouched,
         unpin the reservation — all in one optimistic commit (with
         abort-and-cleanup on a write-write conflict).  Used by the
-        island rewrite (survivors at the NEW generation) and by the
-        r12 retained per-fragment purge (value-identical survivors at
-        their ORIGINAL generations)."""
+        island rewrite and the whole-table retained rewrite (survivors
+        at the NEW generation) and by the r12 retained per-fragment
+        purge (value-identical survivors at their ORIGINAL
+        generations).  The reservation already stamped and labelled
+        ``new_seq``; retiring the hit fragments at it keeps that stamp
+        present, so a zero-survivor commit stays stamped too."""
+        from dataclasses import replace as _dc_replace
+
+        from spark_sql_on_hbase_spark.catalog import ConcurrentWriteError
+
         hit_paths_l = [f.path for f in hit]
         hp = set(hit_paths_l)
 
         def commit():
-            from dataclasses import replace as _dc_replace
-
-            from spark_sql_on_hbase_spark.catalog import ConcurrentWriteError
-
             m = self.meta
             # hit fragments must still be live on EVERY attempt (the
             # reservation's conflict-reload may have absorbed a
@@ -1134,23 +1144,13 @@ class AstroRelation:
                     m, m.regions, restamp="keep", drops_live=True
                 )
 
-        self._abortable_retained_commit(commit, hit_paths_l, new_files, new_seq)
-        self._ensure_generation_stamp(new_seq)
-
-    def _abortable_retained_commit(
-        self, commit_fn, require_live: list[str], new_files: list[str], new_seq: int
-    ) -> None:
-        """Run a retained rewrite's commit with optimistic retry; on a
-        genuine write-write conflict (our base fragments are gone), undo
-        everything this statement materialized — the published rw- files
-        AND the generation reservation — before surfacing the error, so
-        an aborted statement leaves no phantom generation and no orphan
-        storage."""
-        from spark_sql_on_hbase_spark.catalog import ConcurrentWriteError
-
         try:
-            self._commit_retry(commit_fn, require_live=require_live)
+            self._commit_retry(commit, require_live=hit_paths_l)
         except ConcurrentWriteError:
+            # genuine write-write conflict (our base fragments are gone):
+            # undo everything this statement materialized — the published
+            # rw- files AND the generation reservation — so an aborted
+            # statement leaves no phantom generation and no orphan storage
             for p in new_files:
                 try:
                     fsops.unlink(p)
@@ -1181,11 +1181,21 @@ class AstroRelation:
         surviving generation (island/keyset/zorder rewrites);
         'keep' leaves floor and stamps untouched (the key-only
         retroactive purge, which rewrites every generation
-        consistently)."""
+        consistently).
+
+        DESCRIBE HISTORY: when the relation writes for a statement and
+        the fold leaves generation 0 as the newest commit, the statement
+        rebuilt generation 0 and the same commit labels it.  A fold
+        whose survivors keep higher generations relabels nothing —
+        those generations belong to earlier statements."""
         from spark_sql_on_hbase_spark.catalog import ConcurrentWriteError
 
         hit_paths = [f.path for f in hit]
         hp = set(hit_paths)
+
+        def label_fold(m) -> None:
+            if self.op and m.next_seq() <= 1:
+                m.generation_ops["0"] = self.op
 
         def commit():
             m = self.meta
@@ -1207,6 +1217,10 @@ class AstroRelation:
                 )
             if demoted:
                 m.layout = "range"
+            if floor_rule == "keep":
+                # a purge keeps every generation, so the newest one is
+                # known now: the label rides the refresh commit
+                label_fold(m)
             # MERGE with (never replace) any entries a conflict reload
             # adopted from a sibling's commit — dropping them would leak
             # the sibling's replaced files on disk forever
@@ -1225,8 +1239,10 @@ class AstroRelation:
             if floor_rule == "max_surviving":
                 # floor = max SURVIVING generation (r8 review #2 / r9):
                 # computed after the refresh so delete-everything states
-                # (no surviving newest gens) floor correctly
+                # (no surviving newest gens) floor correctly; the label
+                # rides the same commit
                 m.history_floor = max((r.seq for r in m.regions), default=0)
+                label_fold(m)
                 self.catalog.persist(m)
 
         try:
@@ -1817,26 +1833,6 @@ class AstroRelation:
             "deferred_leased_paths": deferred_paths,
         }
 
-    def _record_gen_op(self, seq: int, op: str) -> None:
-        """Record the operation that committed generation ``seq`` (r11 —
-        DESCRIBE HISTORY).  Writers record the MECHANISM; the SQL
-        session overrides with the statement name."""
-        self.meta.generation_ops[str(seq)] = op
-        self.catalog.persist(self.meta)
-
-    def _ensure_generation_stamp(self, seq: int) -> None:
-        """A retained rewrite that emitted zero survivor files (a DELETE
-        emptying its islands) has no file mtime to stamp its generation
-        from — stamp it explicitly, else ``TIMESTAMP AS OF now`` would
-        resolve to the pre-rewrite generation and resurrect deleted
-        rows."""
-        import time
-
-        meta = self.meta
-        if str(seq) not in meta.generation_times:
-            meta.generation_times[str(seq)] = time.time()
-            self.catalog.persist(meta)
-
     def rewrite_full_retained(self, out: DataFrame) -> dict:
         """Whole-table rewrite under MVCC retention (r10, VERDICT r9 #1):
         the fallback plan when no pruned retained path applies (non-
@@ -1866,7 +1862,7 @@ class AstroRelation:
             return {"files_total": 0, "files_rewritten": 0, "history": "retained"}
         # reservation = the writer-path commit stamp + the concurrency
         # claim (r12 CAS; see append)
-        new_seq = self._reserve_generation("REWRITE")  # session overrides op
+        new_seq = self._reserve_generation("REWRITE")  # labels the generation
         keyed = self._with_rowkey(out.select(*[c for c, _ in meta.all_columns]))
         keyed = self._physical_encode(keyed).withColumn(SEQ_COL, F.lit(new_seq))
         # file granularity mirrors the pre-rewrite layout: sorted live
@@ -1885,48 +1881,7 @@ class AstroRelation:
             "files_rewritten": len(hit),
             "history": "retained",
         }
-        hit_paths_l = [r.path for r in hit]
-        hp = set(hit_paths_l)
-
-        def commit():
-            from dataclasses import replace as _dc_replace
-
-            from spark_sql_on_hbase_spark.catalog import ConcurrentWriteError
-
-            m = self.meta
-            # base fragments must still be live on every attempt (see
-            # _commit_fold_partial)
-            live = {r.path for r in m.regions}
-            if not hp <= live:
-                raise ConcurrentWriteError(
-                    f"{m.namespace}.{m.name}",
-                    m.meta_version,
-                    m.meta_version,
-                    detail=(
-                        "a concurrent writer rewrote fragments this "
-                        "statement resolved — re-run the statement"
-                    ),
-                )
-            if demoted:
-                m.layout = "range"
-            m.pinned_gens = [g for g in m.pinned_gens if g != new_seq]
-            m.retired_regions = m.retired_regions + [
-                _dc_replace(r, retired_at=new_seq)
-                for r in m.regions
-                if r.path in hp
-            ]
-            m.regions = [r for r in m.regions if r.path not in hp]
-            if new_files:
-                self._refresh_region_bounds(
-                    only=new_files, restamp="keep", drops_live=True
-                )
-            else:
-                self.catalog.update_regions(
-                    m, m.regions, restamp="keep", drops_live=True
-                )
-
-        self._abortable_retained_commit(commit, hit_paths_l, new_files, new_seq)
-        self._ensure_generation_stamp(new_seq)
+        self._commit_retired_hit(hit, new_files, new_seq, demoted)
         return stats
 
     def _publish_survivors(

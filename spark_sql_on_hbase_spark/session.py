@@ -70,9 +70,18 @@ class AstroSession:
         self.last_select_route = None
 
     # -- helpers ------------------------------------------------------------
-    def relation(self, table: str, namespace: str = "default") -> AstroRelation:
+    def relation(
+        self, table: str, namespace: str = "default", op: str | None = None
+    ) -> AstroRelation:
+        """``op``: the write statement's name.  Every generation the
+        relation commits is labelled with it inside that commit
+        (DESCRIBE HISTORY), and the relation starts from fresh metadata:
+        the statement's append-vs-bulk-write routing reads it."""
         meta = self.catalog.get_table(table, namespace)
-        return AstroRelation(self.catalog, meta, self.spark)
+        rel = AstroRelation(self.catalog, meta, self.spark, op=op)
+        if op is not None:
+            rel._ensure_fresh_regions()
+        return rel
 
     def table(
         self, table: str, namespace: str = "default", as_of_seq: int | None = None
@@ -621,23 +630,15 @@ class AstroSession:
         return self._ok(f"dropped column {c.col}")
 
     def _exec_BulkLoad(self, c: ddl.BulkLoad) -> DataFrame:
-        rel = self.relation(c.table, c.namespace)
-        # a never-committed table reports seq 0 both before and after
-        # its first write: use -1 so the statement op still records
-        before = rel.committed_seq() if rel.meta.generation_times else -1
+        rel = self.relation(c.table, c.namespace, op="LOAD")
         rel.load_csv(c.path, delimiter=c.delimiter)
-        # force-record only for a FRESH table (before == -1, where both
-        # seqs read 0); an empty LOAD into an already-written table must
-        # not relabel the previous newest generation's op (ADVICE r11)
-        self._record_op(rel, "LOAD", before, always=(before == -1))
         rel.register_view()
         return self._ok(f"loaded {c.path} into {c.table}")
 
     def _exec_InsertValues(self, c: ddl.InsertValues) -> DataFrame:
-        rel = self.relation(c.table, c.namespace)
-        # a never-committed table reports seq 0 both before and after
-        # its first write: use -1 so the statement op still records
-        before = rel.committed_seq() if rel.meta.generation_times else -1
+        rel = self.relation(
+            c.table, c.namespace, op="INSERT OVERWRITE" if c.overwrite else "INSERT"
+        )
         schema = table_schema(rel.meta)
         coerced = []
         for row in c.values:
@@ -659,14 +660,11 @@ class AstroSession:
             rel.append(df, fragments=max(1, -(-len(coerced) // 50_000)))
         else:
             rel.write(df)
-        self._record_op(
-            rel,
-            "INSERT OVERWRITE" if c.overwrite else "INSERT",
-            before,
-            always=c.overwrite,
-        )
         rel.register_view()
-        return self._ok("overwrote 1 row" if c.overwrite else "inserted 1 row")
+        n = len(coerced)
+        return self._ok(
+            f"{'overwrote' if c.overwrite else 'inserted'} {n} row{'' if n == 1 else 's'}"
+        )
 
     @staticmethod
     def _fold_keyset_fallback(rel: AstroRelation, stats: dict) -> dict:
@@ -721,10 +719,9 @@ class AstroSession:
     def _exec_InsertSelect(self, c: ddl.InsertSelect) -> DataFrame:
         self._register_all()
         src = self.spark.sql(c.select_sql)
-        rel = self.relation(c.table, c.namespace)
-        # a never-committed table reports seq 0 both before and after
-        # its first write: use -1 so the statement op still records
-        before = rel.committed_seq() if rel.meta.generation_times else -1
+        rel = self.relation(
+            c.table, c.namespace, op="INSERT OVERWRITE" if c.overwrite else "INSERT"
+        )
         named = src.toDF(*[n for n, _ in rel.meta.all_columns])
         cast = named.select(
             *[named[n].cast(table_schema(rel.meta)[n].dataType) for n, _ in rel.meta.all_columns]
@@ -738,12 +735,6 @@ class AstroSession:
             rel.append(cast)
         else:
             rel.write(cast)
-        self._record_op(
-            rel,
-            "INSERT OVERWRITE" if c.overwrite else "INSERT",
-            before,
-            always=c.overwrite,
-        )
         rel.register_view()
         return self._ok(f"{'overwrote' if c.overwrite else 'inserted into'} {c.table}")
 
@@ -828,10 +819,7 @@ class AstroSession:
         if not self.catalog.table_exists(c.table, c.namespace):
             return self.spark.sql(c.raw)
         self._register_all()
-        rel = self.relation(c.table, c.namespace)
-        # a never-committed table reports seq 0 both before and after
-        # its first write: use -1 so the statement op still records
-        before = rel.committed_seq() if rel.meta.generation_times else -1
+        rel = self.relation(c.table, c.namespace, op="UPDATE")
         cols = [n for n, _ in rel.meta.all_columns]
         schema = table_schema(rel.meta)
         proj = self._update_projection(rel, c.update_set, "")
@@ -847,14 +835,12 @@ class AstroSession:
                 + " LIMIT 1"
             )
             if probe.take(1):
-                out = self._update_via_rewrite(rel, c)
-                self._record_fold_op(rel, "UPDATE", before, self.last_write_stats)
-                return out
+                return self._update_via_rewrite(rel, c)
         df = self.spark.sql(
             f"SELECT {proj} FROM {c.table}" + (f" WHERE {c.where}" if c.where else "")
         )
         cast = df.select(*[df[n].cast(schema[n].dataType) for n in cols])
-        rel.append(cast, op="UPDATE")
+        rel.append(cast)
         rel.register_view()
         return self._ok(f"updated {c.table}")
 
@@ -942,10 +928,7 @@ class AstroSession:
         if not self.catalog.table_exists(c.table, c.namespace):
             return self.spark.sql(c.raw)
         self._register_all()
-        rel = self.relation(c.table, c.namespace)
-        # a never-committed table reports seq 0 both before and after
-        # its first write: use -1 so the statement op still records
-        before = rel.committed_seq() if rel.meta.generation_times else -1
+        rel = self.relation(c.table, c.namespace, op="DELETE")
         self.last_write_stats = None
         stats = None
         if c.where:
@@ -979,7 +962,6 @@ class AstroSession:
                 rel.overwrite(survivors)
                 stats = {"files_total": n, "files_rewritten": n, "history": "folded"}
         self.last_write_stats = stats
-        self._record_fold_op(rel, "DELETE", before, stats)
         rel.register_view()
         return self._ok(f"deleted from {c.table}")
 
@@ -1101,10 +1083,7 @@ class AstroSession:
         if not self.catalog.table_exists(c.table, c.namespace):
             return self.spark.sql(c.raw)
         self._register_all()
-        rel = self.relation(c.table, c.namespace)
-        # a never-committed table reports seq 0 both before and after
-        # its first write: use -1 so the statement op still records
-        before = rel.committed_seq() if rel.meta.generation_times else -1
+        rel = self.relation(c.table, c.namespace, op="MERGE")
         cols = [n for n, _ in rel.meta.all_columns]
         keyset = {k.name for k in rel.meta.key_columns}
         t, s = c.target_alias, c.source_alias
@@ -1237,7 +1216,6 @@ class AstroSession:
             else:
                 rel.write(merged)
         rel.register_view()
-        self._record_fold_op(rel, "MERGE", before, self.last_write_stats)
         return self._ok(f"merged into {c.table}")
 
     def _merge_update_rewrite(self, rel: AstroRelation, c: ddl.MergeInto) -> None:
@@ -1284,38 +1262,6 @@ class AstroSession:
                 stats = {"files_total": n, "files_rewritten": n}
         self.last_write_stats = stats
 
-    def _record_op(self, rel: AstroRelation, op: str, before_seq: int, always: bool = False) -> None:
-        """Override the writer-recorded MECHANISM with the statement name
-        for DESCRIBE HISTORY (r11).  Recorded only when the statement
-        actually committed a generation (``committed_seq`` moved), or
-        unconditionally for whole-table rebuilds (``always`` — an
-        OVERWRITE of a gen-0 table re-lands at generation 0)."""
-        cur = rel.committed_seq()
-        if always or cur != before_seq:
-            rel.meta.generation_ops[str(cur)] = op
-            self.catalog.persist(rel.meta)
-
-    def _record_fold_op(
-        self, rel: AstroRelation, op: str, before_seq: int, stats: dict | None
-    ) -> None:
-        """_record_op for statements that may FOLD history back to
-        generation 0 (DELETE / UPDATE-via-rewrite / MERGE rewrites —
-        ADVICE r11): on a table whose only generation is 0, a folding
-        rewrite leaves ``committed_seq`` unchanged (0 == 0), so the
-        cur != before check alone would leave DESCRIBE HISTORY showing
-        the mechanism ('OVERWRITE'/'REWRITE') instead of the statement —
-        the identical gen-0 hazard INSERT OVERWRITE already handles with
-        always=True.  Force-record exactly when the rewrite actually
-        rebuilt files AND the table folded to generation 0; a fold whose
-        survivors keep higher generations must NOT relabel them (those
-        generations were committed by earlier statements)."""
-        folded_to_zero = bool(
-            stats
-            and stats.get("files_rewritten", 0) > 0
-            and rel.committed_seq() == 0
-        )
-        self._record_op(rel, op, before_seq, always=folded_to_zero)
-
     def _exec_DescribeHistory(self, c: ddl.DescribeHistory) -> DataFrame:
         """DESCRIBE HISTORY t (r11 — Delta analog): one row per stamped
         generation, newest first: commit wall-clock, the operation that
@@ -1353,14 +1299,13 @@ class AstroSession:
         )
 
     def _exec_RestoreTable(self, c: ddl.RestoreTable) -> DataFrame:
-        rel = self.relation(c.table, c.namespace)
+        rel = self.relation(c.table, c.namespace, op="RESTORE")
         seq = (
             c.version
             if c.version is not None
             else rel.seq_for_timestamp(self._parse_asof_timestamp(c.timestamp))
         )
         stats = rel.restore(seq)
-        self._record_op(rel, "RESTORE", -1, always=True)
         self.last_write_stats = stats
         rel.register_view()
         return self._ok(f"restored {c.table} to generation {seq}")

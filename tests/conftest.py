@@ -43,14 +43,14 @@ def pytest_collection_modifyitems(config, items):
         a = str(a)
         if a.startswith("-"):
             continue
-        p = os.path.abspath(a.split("::")[0])
+        p = str(Path(a.split("::")[0]).resolve())
         if p not in broad and (os.path.isfile(p) or os.path.isdir(p)):
             explicit.add(p)
     skip = pytest.mark.skip(reason="slow lane: --runslow / SPARK_GRAFT_SLOW=1")
     for item in items:
         if "slow" not in item.keywords:
             continue
-        path = str(item.path)
+        path = str(Path(item.path).resolve())
         if any(path == e or path.startswith(e + os.sep) for e in explicit):
             continue  # named explicitly — run it
         item.add_marker(skip)

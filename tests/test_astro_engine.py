@@ -760,10 +760,13 @@ def test_multirow_insert_values(spark, tmp_path):
         "CREATE TABLE mr (k INT, v STRING, PRIMARY KEY (k)) "
         "MAPPED BY (mr_ht, COLS=[v=f.v])"
     )
-    a.sql("INSERT INTO mr VALUES (1, 'one'), (2, 'two, (2)'), (3, NULL)")
+    res = a.sql("INSERT INTO mr VALUES (1, 'one'), (2, 'two, (2)'), (3, NULL)")
+    assert res.collect()[0].result == "inserted 3 rows"  # not "1 row"
     got = sorted((r.k, r.v) for r in a.sql("SELECT * FROM mr").collect())
     assert got == [(1, "one"), (2, "two, (2)"), (3, None)]
     rel = a.relation("mr")
     assert len({r.seq for r in rel.meta.regions}) == 1  # one generation
     a.sql("INSERT INTO mr VALUES (4, 'x'),(5,'y')")
     assert a.sql("SELECT count(*) AS n FROM mr").collect()[0].n == 5
+    res = a.sql("INSERT INTO mr VALUES (6, 'z')")
+    assert res.collect()[0].result == "inserted 1 row"

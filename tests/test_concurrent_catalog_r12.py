@@ -121,6 +121,47 @@ def test_forced_conflict_retries_on_append(spark, tmp_path, mode, monkeypatch):
     assert c.sql("SELECT count(*) c FROM cc3 WHERE k <= 25").collect()[0].c == 0
 
 
+def test_history_labels_survive_sibling_commit_mid_statement(
+    spark, tmp_path, mode, monkeypatch
+):
+    """A's INSERT commits its generation, then B's LOAD commits the next
+    one before A's statement returns.  Each generation keeps the label of
+    the statement that committed it, because the label is written inside
+    the generation's own commit — a label written after the statement,
+    to "the newest generation", would land on B's."""
+    from spark_sql_on_hbase_spark.relation import AstroRelation
+
+    wh = str(tmp_path / "warehouse")
+    a = AstroSession(spark, wh)
+    csv_a = tmp_path / "hr_a.csv"
+    csv_a.write_text("".join(f"{k},v{k}\n" for k in range(1, 21)))
+    csv_b = tmp_path / "hr_b.csv"
+    csv_b.write_text("".join(f"{k},b{k}\n" for k in range(21, 31)))
+    a.sql(
+        "CREATE TABLE hr (k INT, v STRING, PRIMARY KEY (k)) "
+        "MAPPED BY (hr_ht) OPTIONS (regions=2)"
+    )
+    a.sql(f"LOAD DATA INPATH '{csv_a}' INTO TABLE hr")
+    b = AstroSession(spark, wh)
+    orig = AstroRelation._maybe_autocompact
+    fired = []
+
+    def sibling_load_after(self):
+        orig(self)
+        if not fired:
+            fired.append(True)
+            b.sql(f"LOAD DATA INPATH '{csv_b}' INTO TABLE hr")
+
+    monkeypatch.setattr(AstroRelation, "_maybe_autocompact", sibling_load_after)
+    a.sql("INSERT INTO hr VALUES (100, 'x')")
+    monkeypatch.setattr(AstroRelation, "_maybe_autocompact", orig)
+    assert fired
+    c = AstroSession(spark, wh)
+    hist = {r.generation: r.operation for r in c.sql("DESCRIBE HISTORY hr").collect()}
+    assert hist == {0: "LOAD", 1: "INSERT", 2: "LOAD"}
+    assert c.sql("SELECT count(*) c FROM hr").collect()[0].c == 31
+
+
 @pytest.mark.slow  # r16 (VERDICT r15 #1): soak/fuzz sweep — --runslow lane
 def test_streaming_sink_races_batch_update(spark, tmp_path, mode):
     """The verdict's named scenario: a streaming sink (micro-batch

@@ -1,6 +1,11 @@
 """r11: DESCRIBE HISTORY — the generation log (Delta analog): commit
-time, recording operation (statement name via the session, mechanism
-from direct relation writes), file counts, snapshot readability.
+time, recording operation, file counts, snapshot readability.
+
+The operation label is written inside the commit that creates or folds
+the generation: the statement name when the session runs the write
+(``AstroRelation(..., op="DELETE")``), the mechanism for direct relation
+writes (APPEND, WRITE, COMPACT, ...).  No later commit relabels it; the
+race case lives in test_concurrent_catalog_r12.py.
 """
 
 import io
